@@ -340,7 +340,7 @@ object SparkEntry {
        """ + kmeansCteBody("(SELECT k FROM semk)")
 
   /** Shared WITH-prefix of the PQ oracle family — the DuckDB replay of
-    * [[graft.queries.SimilarityQueries.kmeansL2]]: the embedding frame,
+    * [[graft.queries.SimilarityQueries.pqSubFit]]: the embedding frame,
     * all four sub-codebook fits (two L2 Lloyd rounds each from
     * lowest-vec_id seeds; argmin-d² assignment with tie → lowest cid;
     * 6-dp mean grid; empty cells keep their previous centroid) and the
@@ -457,7 +457,7 @@ object SparkEntry {
   /** Allocation + the four PERMUTED-slice sub-fits (CTE names prefixed
     * `o`): each subspace's e-CTE projects its allocated dimensions in
     * ascending order via the operm lists — the oracle half of
-    * [[graft.queries.SimilarityQueries.opqFit]]. */
+    * [[graft.queries.SimilarityQueries.pqSubFit]] on permuted slices. */
   private val OpqCte: String = OpqAllocCte + ",\n       " +
     pqSubFitCtes("pqemb", pfx = "o", subvecOverride = j => Some(
       s"""SELECT vec_id, sv, list_dot_product(sv, sv) AS vn2 FROM (

@@ -1031,8 +1031,7 @@ object CorpusQueries {
     * vector. */
   def embedQuant(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    Tables.vectors(spark, dir)
       .withColumn("scale",
         array_max(transform($"v", x => abs(x))) / QuantLevels)
       .select($"vec_id", $"scale", posexplode($"v").as(Seq("pos", "x")))
@@ -1064,15 +1063,14 @@ object CorpusQueries {
     * arrays and standardization is a map-only array transform.
     *
     * Cross-engine determinism: mean and stddev_pop are rounded to 6 dp
-    * FIRST (the kmeansCentroids convention — fold-order noise on a moment
+    * FIRST (the kmeansFit mean-grid convention — fold-order noise on a moment
     * is ~1e-15, nine orders below the grid), so both engines standardize
     * with bit-identical (m, s) and `round(z, 6)` sees bit-identical input;
     * the per-value boundary hazard of rounding 64·n independent floats is
     * confined to the 2·d moment values instead. */
   def embedNorm(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val e = Tables.vectors(spark, dir)
     val stats = e.select(posexplode($"v").as(Seq("dim", "x")))
       .groupBy($"dim")
       .agg(round(avg($"x"), 6).as("m"), round(stddev_pop($"x"), 6).as("s"))
@@ -1899,8 +1897,7 @@ object CorpusQueries {
     * shared rounding. */
   def randProj(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    Tables.vectors(spark, dir)
       .select($"vec_id",
         posexplode(graft.functions.Similarity.randProject($"v"))
           .as(Seq("dim0", "p")))
@@ -1918,8 +1915,7 @@ object CorpusQueries {
   def jlAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val S = graft.functions.Similarity
-    Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    Tables.vectors(spark, dir)
       .withColumn("pv", S.randProject($"v"))
       .withColumn("orig_nrm", S.l2norm($"v"))
       .withColumn("proj_nrm", S.l2norm($"pv"))

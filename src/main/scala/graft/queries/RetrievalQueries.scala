@@ -104,8 +104,7 @@ object RetrievalQueries {
       .withColumn("r_bm25",
         row_number().over(Window.orderBy($"bm25".desc, $"doc_id")))
       .select($"doc_id", $"r_bm25")
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("nrm", Similarity.l2norm($"v"))
     val qv = emb.filter($"vec_id" === 0)
       .select($"v".as("q"), $"nrm".as("qn"))

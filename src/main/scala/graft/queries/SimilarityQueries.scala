@@ -568,8 +568,7 @@ object SimilarityQueries {
     * identically; ties break on neighbor_id. */
   def knnCosine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("nrm", Similarity.l2norm($"v"))
     val queries = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
@@ -611,8 +610,7 @@ object SimilarityQueries {
     * plans flat. */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("nrm", Similarity.l2norm($"v"))
     val queries = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
@@ -694,58 +692,112 @@ object SimilarityQueries {
       .orderBy($"query_id", $"rank")
   }
 
-  /** Lloyd iterations for the coarse quantizers: distributed k-means over a
-    * (vec_id, v) frame — VERDICT r2 #5, composing the [[labelCentroids]]
-    * building block into the ANN/dedup operators.
+  // ---------------------------------------------------------------------
+  // The vector-quantizer core: ONE nearest-centroid decision behind every
+  // k-means, IVF, SemDeDup, RNN and PQ/OPQ face. The decision is the
+  // metric's argmax/argmin with tie → lowest cid; a fit adds the 6-dp mean
+  // grid and keeps a cell's previous centroid when it loses all members.
+  // The DuckDB twins replay it through kmeansCteBody and pqSubFitCtes.
+  // ---------------------------------------------------------------------
+
+  /** A nearest-centroid metric: the norm term both sides carry, the
+    * per-pair score, and the tie rule. Cosine and L2 stay two orderings —
+    * `max_by(…, struct(ccos, −cid))` and `min_by(…, struct(d2, cid))` —
+    * because negating one into the other changes how NaN and −0.0
+    * rank. */
+  private[graft] sealed trait Metric {
+    /** Norm-term column on the vector side. */
+    def vn: String
+    /** Norm-term column a fitted centroid frame carries next to `cv`. */
+    def cn: String
+    /** Per-pair score column. */
+    def score: String
+    def norm(v: Column): Column
+    def scoreOf(v: Column, vn: Column, cv: Column, cn: Column): Column
+    /** The carried struct of the winning centroid, tie → lowest cid. */
+    def best(carried: Column): Column
+  }
+
+  /** Argmax cosine: dot(v, c) / (‖v‖·‖c‖). A zero-norm vector has no
+    * cosine: under the session's ANSI arithmetic its 0/0 raises
+    * DIVIDE_BY_ZERO. */
+  private[graft] case object Cosine extends Metric {
+    val vn = "nrm"
+    val cn = "cn"
+    val score = "ccos"
+    def norm(v: Column): Column = Similarity.l2norm(v)
+    def scoreOf(v: Column, vn: Column, cv: Column, cn: Column): Column =
+      Similarity.dot(v, cv) / (vn * cn)
+    def best(carried: Column): Column =
+      max_by(carried, struct(col(score), -col("cid")))
+  }
+
+  /** Argmin squared L2, d² = (‖v‖² − 2·v·c) + ‖c‖²: every term a
+    * sequential-fold dot both engines evaluate identically, so PQ fits
+    * replay bit-for-bit in the oracle's unrolled CTEs. */
+  private[graft] case object L2 extends Metric {
+    val vn = "vn2"
+    val cn = "cn2"
+    val score = "d2"
+    def norm(v: Column): Column = Similarity.dot(v, v)
+    def scoreOf(v: Column, vn: Column, cv: Column, cn: Column): Column =
+      (vn - lit(2.0) * Similarity.dot(v, cv)) + cn
+    def best(carried: Column): Column =
+      min_by(carried, struct(col(score), col("cid")))
+  }
+
+  /** Nearest centroid of every `(vec_id, v)` row: one crossJoin against
+    * the broadcast k-row centroid frame `(cid, cv, <metric.cn>)`, reduced
+    * per vec_id by a partial+final max_by/min_by aggregate (VERDICT r4 #4)
+    * — the n×k scored rows collapse map-side instead of shuffling into a
+    * per-vector window sort. The vector's norm term is computed once per
+    * row, never per pair. Returns `(vec_id, cid, carried…)`, where
+    * `carried` names columns of `vecs`, the norm term `metric.vn` or the
+    * score `metric.score` at the winning centroid. */
+  private[graft] def nearest(vecs: DataFrame, cents: DataFrame, metric: Metric,
+      carried: String*): DataFrame = {
+    val kept = "cid" +: carried
+    vecs.withColumn(metric.vn, metric.norm(col("v")))
+      .crossJoin(broadcast(cents.select(col("cid"), col("cv"), col(metric.cn))))
+      .withColumn(metric.score, metric.scoreOf(col("v"), col(metric.vn),
+        col("cv"), col(metric.cn)))
+      .groupBy(col("vec_id"))
+      .agg(metric.best(struct(kept.map(col): _*)).as("best"))
+      .select(col("vec_id") +: kept.map(c => col(s"best.$c").as(c)): _*)
+  }
+
+  /** Lloyd iterations over a `(vec_id, v)` frame under `metric` — the one
+    * fit behind the cosine coarse quantizer (VERDICT r2 #5) and every PQ
+    * sub-codebook. Returns `(cid, cv, <metric.cn>)`.
     *
-    * Init = the k lowest-vec_id vectors (the former fixed seeds, so results
-    * are deterministic with no runtime RNG); each round assigns every
-    * vector to its nearest centroid by cosine (argmax, tie → lowest cid —
-    * one crossJoin against a broadcast k-row frame, exactly the assignment
-    * join the querying operators already run) and recomputes per-cell means
-    * as a posexplode → (cid, dim) partial+final aggregate. The
-    * dedupComponents iteration shape: driver holds only the loop counter,
-    * vectors never leave executors, `localCheckpoint` keeps the k-row
-    * centroid plan constant-size across rounds. Cells that lose all
-    * members keep their previous centroid. Means are rounded to 6 dp so
-    * centroid bits — and therefore downstream IVF assignment — do not
-    * depend on partition fold order (fold-order noise on a cell mean is
-    * ~1e-15, nine orders below the rounding grid), which also makes the
-    * whole iteration SQL-expressible: q_kmeans_centroids carries a DuckDB
-    * oracle with the two Lloyd rounds unrolled as CTEs. */
-  private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    import emb.sparkSession.implicits._
-    var cents = emb.filter($"vec_id" < k)
-      .select($"vec_id".as("cid"), $"v".as("cv"),
-        Similarity.l2norm($"v").as("cn"))
+    * Init = the k lowest-vec_id vectors (deterministic, no runtime RNG);
+    * each round assigns every vector with [[nearest]] and recomputes
+    * per-cell means as a posexplode → (cid, dim) partial+final aggregate.
+    * The driver holds only the loop counter, vectors never leave
+    * executors, and `localCheckpoint` keeps the k-row centroid plan
+    * constant-size across rounds. Cells that lose all members keep their
+    * previous centroid. Means are rounded to 6 dp so centroid bits — and
+    * every downstream assignment — do not depend on partition fold order
+    * (fold-order noise on a cell mean is ~1e-15, nine orders below the
+    * grid), which also makes the iteration SQL-expressible: the oracles
+    * unroll the rounds as CTEs. */
+  private[graft] def kmeansFit(vecs: DataFrame, k: Int, iters: Int,
+      metric: Metric): DataFrame = {
+    def normed(c: DataFrame) = c.withColumn(metric.cn, metric.norm(col("cv")))
+    var cents = normed(vecs.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cid"), col("v").as("cv")))
       .localCheckpoint()
-    // own norm column (one map-only pass) so the assignment expression has
-    // a single dot product per row — norms are never recomputed per pair
-    val base = emb.select($"vec_id", $"v")
-      .withColumn("vn", Similarity.l2norm($"v"))
-    // argmax as a partial+final max_by aggregate (VERDICT r4 #4): the n×k
-    // assignment reduces map-side to one row per vec_id instead of
-    // shuffling all n×k scored rows into a per-vec window sort. Ordering
-    // key struct(ccos, -cid) is total (cids distinct), so the result is
-    // deterministic and identical to the old row_number()=1 plan:
-    // max ccos, tie → lowest cid.
     for (_ <- 0 until iters) {
-      val assigned = base.crossJoin(broadcast(cents))
-        .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"vn" * $"cn"))
-        .groupBy($"vec_id")
-        .agg(max_by(struct($"cid", $"v"), struct($"ccos", -$"cid")).as("best"))
-        .select($"best.cid".as("cid"), $"best.v".as("v"))
-      val means = assigned
-        .select($"cid", posexplode($"v").as(Seq("dim", "x")))
-        .groupBy($"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
-        .groupBy($"cid")
-        .agg(transform(array_sort(collect_list(struct($"dim", $"m"))),
+      val means = nearest(vecs, cents, metric, "v")
+        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy(col("cid"), col("dim")).agg(round(avg(col("x")), 6).as("m"))
+        .groupBy(col("cid"))
+        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
           s => s.getField("m")).as("cv"))
       val prev = cents
-      cents = cents.as("old")
+      cents = normed(cents.as("old")
         .join(means.as("nw"), Seq("cid"), "left")
-        .select($"cid", coalesce($"nw.cv", $"old.cv").as("cv"))
-        .withColumn("cn", Similarity.l2norm($"cv"))
+        .select(col("cid"), coalesce(col("nw.cv"), col("old.cv")).as("cv")))
         .localCheckpoint()
       // superseded Lloyd round (VERDICT r12 #5 cold-pass hygiene): the new
       // eager checkpoint no longer reads these blocks
@@ -763,23 +815,20 @@ object SimilarityQueries {
     * catalog — [[SessionMemo]]-cached: q_kmeans_centroids, IVF-flat,
     * SemDeDup and the exact metric join all consume the SAME k=16 fit, and
     * without the memo each pays the Lloyd rounds again for bit-identical
-    * centroids ([[kmeansCentroids]] ends every round in a localCheckpoint,
-    * so the cached frame is already executor-materialized). */
+    * centroids ([[kmeansFit]] ends every round in a localCheckpoint, so
+    * the cached frame is already executor-materialized). */
   private def fittedCentroids(spark: SparkSession, dir: String, k: Int)
       : DataFrame =
     SessionMemo.cached(spark,
       s"centroids:k=$k:" + SessionMemo.tableTag(dir, "embeddings")) {
-      import spark.implicits._
-      val emb = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      kmeansCentroids(emb, k, KmeansIters)
+      kmeansFit(Tables.vectors(spark, dir), k, KmeansIters, Cosine)
     }
 
   /** The fitted k-means centroids as a (cid, dim, mean_val) profile — the
-    * registered, ORACLE-CHECKED face of [[kmeansCentroids]]: DuckDB reruns
-    * both Lloyd rounds as unrolled CTEs (same seeds, same argmax tiebreak,
-    * same 6-dp mean rounding) and must reproduce every component bit-for-
-    * bit. Sequential-fold dot products and the rounding grid make each
+    * registered, ORACLE-CHECKED face of the cosine [[kmeansFit]]: DuckDB
+    * reruns both Lloyd rounds as unrolled CTEs (same seeds, same argmax
+    * tiebreak, same 6-dp mean rounding) and must reproduce every component
+    * bit-for-bit. Sequential-fold dot products and the rounding grid make each
     * round's output identical across engines, so round 2's assignment sees
     * identical centroids — induction the oracle verifies end-to-end. */
   def kmeansProfile(spark: SparkSession, dir: String): DataFrame = {
@@ -790,7 +839,7 @@ object SimilarityQueries {
   }
 
   /** IVF-flat approximate NN: a coarse k-means quantizer
-    * ([[kmeansCentroids]], [[KmeansIters]] Lloyd rounds from deterministic
+    * (cosine [[kmeansFit]], [[KmeansIters]] Lloyd rounds from deterministic
     * lowest-vec_id seeds) partitions the catalog into inverted lists; each
     * query probes only its nearest centroid's list (nprobe=1). Join keys
     * are centroid ids, so the shuffle is O(n) on the list key — same scale
@@ -798,17 +847,8 @@ object SimilarityQueries {
     * (approximate); recall vs brute force asserted in ScalaTest. */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
-    val centroids = fittedCentroids(spark, dir, 16)
-    // assign every vector to its nearest centroid (argmax cosine, tie →
-    // lowest cid) — max_by partial+final aggregate, not a window sort
-    val assigned = emb.crossJoin(broadcast(centroids))
-      .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"nrm" * $"cn"))
-      .groupBy($"vec_id")
-      .agg(max_by(struct($"cid", $"v", $"nrm"), struct($"ccos", -$"cid")).as("best"))
-      .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"), $"best.cid".as("cid"))
+    val assigned = nearest(Tables.vectors(spark, dir),
+      fittedCentroids(spark, dir, 16), Cosine, "v", "nrm")
     val queries = assigned.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"), $"cid".as("qcid"))
     val scored = assigned.join(broadcast(queries),
@@ -838,8 +878,7 @@ object SimilarityQueries {
     * assignment(vec_id, v, nrm, cid, cdist)). */
   private def dupAssignment(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("nrm", Similarity.l2norm($"v"))
     val cents = fittedCentroids(spark, dir, DupCells)
     val assigned = emb.crossJoin(broadcast(cents))
@@ -866,7 +905,7 @@ object SimilarityQueries {
     *
     *  1. on unit vectors, cos(a,b) ≥ t ⟺ ‖â−b̂‖ ≤ r = √(2−2t);
     *  2. assign every vector to its nearest of [[DupCells]] k-means
-    *     centroids ([[kmeansCentroids]], deterministic lowest-vec_id
+    *     centroids (cosine [[kmeansFit]], deterministic lowest-vec_id
     *     seeds), recording the distance to its centroid;
     *  3. per-cell radius = max member distance; by the triangle inequality a
     *     qualifying pair can only span cells (i,j) with
@@ -935,8 +974,7 @@ object SimilarityQueries {
     * broadcast cannot scale past one executor's memory). */
   def embedDupBrute(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("nrm", Similarity.l2norm($"v"))
     emb.as("a").crossJoin(broadcast(emb.as("b")))
       .filter($"a.vec_id" < $"b.vec_id")
@@ -1060,8 +1098,7 @@ object SimilarityQueries {
     * ScalaTest. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("nrm", Similarity.l2norm($"v"))
       .withColumn("bucket", Similarity.lshBucket($"v"))
     val queries = emb.filter($"vec_id" < 10)
@@ -1094,7 +1131,7 @@ object SimilarityQueries {
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     * method): cluster the embedding space with the fitted k-means
-    * quantizer ([[kmeansCentroids]], same [[KmeansIters]] Lloyd rounds the
+    * quantizer (cosine [[kmeansFit]], same [[KmeansIters]] Lloyd rounds the
     * ANN/metric-join operators use — k from [[semDedupK]]), then compare
     * vectors only WITHIN their cluster and report pairs with cosine ≥
     * [[EmbedDupThreshold]] — the within-cluster near-duplicates SemDeDup
@@ -1112,18 +1149,9 @@ object SimilarityQueries {
     * and must hash-match every pair. */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
     val k = semDedupK(embCatalogCount(spark, dir))
-    val cents = fittedCentroids(spark, dir, k)
-    // cluster assignment (argmax cosine, tie → lowest cid) — max_by
-    // partial+final aggregate, not a window sort
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"nrm" * $"cn"))
-      .groupBy($"vec_id")
-      .agg(max_by(struct($"cid", $"v", $"nrm"), struct($"ccos", -$"cid")).as("best"))
-      .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"), $"best.cid".as("cid"))
+    val assigned = nearest(Tables.vectors(spark, dir),
+      fittedCentroids(spark, dir, k), Cosine, "v", "nrm")
     // same salt as embedDupPairs: keyed on cluster id alone the pairing
     // stage tops out at 16 tasks; (cid, salt) keys keep a full fleet busy
     val probe = assigned.as("a")
@@ -1211,19 +1239,12 @@ object SimilarityQueries {
   private def rnnSplitFrames(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm($"v"))
     val k = semDedupK(embCatalogCount(spark, dir))
-    val cents = fittedCentroids(spark, dir, k)
     // eager checkpoint: the assignment feeds the occupancy count, the
     // hot-member frame AND the final split frame — recomputing the n×k
     // argmax crossJoin per consumer would triple the dominant scan
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", Similarity.dot($"v", $"cv") / ($"nrm" * $"cn"))
-      .groupBy($"vec_id")
-      .agg(max_by(struct($"cid", $"v", $"nrm"), struct($"ccos", -$"cid")).as("best"))
-      .select($"vec_id", $"best.v".as("v"), $"best.nrm".as("nrm"), $"best.cid".as("cid"))
+    val assigned = nearest(Tables.vectors(spark, dir),
+      fittedCentroids(spark, dir, k), Cosine, "v", "nrm")
       .localCheckpoint()
     // occupancy-aware split: measure cells, re-quantize the hot ones
     val hot = assigned.groupBy($"cid").agg(count(lit(1)).as("occ"))
@@ -1343,8 +1364,7 @@ object SimilarityQueries {
     * 16-group aggregate — linear, no shuffle beyond the per-vector agg. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("vn", Similarity.l2norm($"v"))
     val cents = fittedCentroids(spark, dir, 16)
     val ab = emb.crossJoin(broadcast(cents))
@@ -1387,8 +1407,7 @@ object SimilarityQueries {
     * per-vector argmin aggregate. */
   def dbIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val emb = Tables.vectors(spark, dir)
       .withColumn("vn", Similarity.l2norm($"v"))
     val cents = fittedCentroids(spark, dir, 16)
     val assigned = emb.crossJoin(broadcast(cents))
@@ -1444,61 +1463,19 @@ object SimilarityQueries {
   /** Centroids per sub-codebook (k*): 4-bit codes. */
   val PqK = 16
 
-  /** Squared-L2 Lloyd iterations over a (vec_id, v) frame — the PQ
-    * sub-codebook fitter. Same doctrine as the cosine [[kmeansCentroids]]
-    * (lowest-vec_id seeds, argmin assignment with tie → lowest cid as a
-    * min_by partial+final aggregate, 6-dp mean grid, empty cells keep the
-    * previous centroid, localCheckpoint keeps the k-row plan constant),
-    * but with the metric PQ requires: d² = (‖v‖² − 2·v·c) + ‖c‖², every
-    * term a sequential-fold dot both engines evaluate identically, so the
-    * whole fit replays bit-for-bit in the DuckDB oracle's unrolled CTEs.
-    * Returns (cid, cv, cn2). */
-  private[graft] def kmeansL2(sub: DataFrame, k: Int, iters: Int): DataFrame = {
-    import sub.sparkSession.implicits._
-    var cents = sub.filter($"vec_id" < k)
-      .select($"vec_id".as("cid"), $"v".as("cv"),
-        Similarity.dot($"v", $"v").as("cn2"))
-      .localCheckpoint()
-    val base = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-    for (_ <- 0 until iters) {
-      val assigned = base.crossJoin(broadcast(cents))
-        .withColumn("d2",
-          ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-        .groupBy($"vec_id")
-        .agg(min_by(struct($"cid", $"v"), struct($"d2", $"cid")).as("best"))
-        .select($"best.cid".as("cid"), $"best.v".as("v"))
-      val means = assigned
-        .select($"cid", posexplode($"v").as(Seq("dim", "x")))
-        .groupBy($"cid", $"dim").agg(round(avg($"x"), 6).as("m"))
-        .groupBy($"cid")
-        .agg(transform(array_sort(collect_list(struct($"dim", $"m"))),
-          s => s.getField("m")).as("cv"))
-      val prev = cents
-      cents = cents.as("old")
-        .join(means.as("nw"), Seq("cid"), "left")
-        .select($"cid", coalesce($"nw.cv", $"old.cv").as("cv"))
-        .withColumn("cn2", Similarity.dot($"cv", $"cv"))
-        .localCheckpoint()
-      // superseded Lloyd round (VERDICT r12 #5 cold-pass hygiene)
-      org.apache.spark.sql.GraftSqlBridge.dropCheckpoint(prev)
-    }
-    cents
-  }
+  /** Subspace `j` of a 64-dim array column: the contiguous 16-dim slice
+    * the plain PQ and IVFADC codebooks fit over. */
+  private def pqSlice(v: Column, j: Int): Column =
+    slice(v, j * PqSubDim + 1, PqSubDim)
 
-  /** The four fitted sub-codebooks as one (sub, cid, cv, cn2) frame plus
-    * the full-catalog code assignment (vec_id, sub, code, d2): each
-    * subspace slices its 16 dims map-side, fits [[kmeansL2]], and assigns
-    * via a broadcast 16-row crossJoin + min_by argmin — the per-vector
-    * cost is 4 subspaces × 16 centroids of 16-dim dots, and no stage ever
-    * shuffles the vectors themselves. */
-  /** Run the independent per-subspace fits from a small driver thread
-    * pool (guide §2.6 — overlap independent jobs): each [[kmeansL2]]
-    * round is an eager checkpoint job over a 16-dim slice whose task
-    * count cannot fill the executor at query-time scale, and the 4
-    * subspaces share nothing — serial submission left the cluster idle
-    * for 3 of every 4 fit tails. FIFO scheduling back-fills; results are
-    * per-subspace and order is preserved by Future.sequence, so the
-    * unions (and therefore every registered face) are bit-identical. */
+  /** Run independent fits from a small driver thread pool (guide §2.6 —
+    * overlap independent jobs): each Lloyd round of a sub-fit is an eager
+    * checkpoint job over a 16-dim slice whose task count cannot fill the
+    * executor at query-time scale, and the subspaces share nothing —
+    * serial submission left the cluster idle for 3 of every 4 fit tails.
+    * FIFO scheduling back-fills; results are per-subspace and order is
+    * preserved by Future.sequence, so the unions (and therefore every
+    * registered face) are bit-identical. */
   private def inParallel[T](xs: Seq[() => T]): Seq[T] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
@@ -1506,31 +1483,35 @@ object SimilarityQueries {
     Await.result(Future.sequence(xs.map(f => Future(f()))), Duration.Inf)
   }
 
+  /** The product-quantizer sub-fit behind PQ, IVFADC and OPQ, which differ
+    * only in how they slice: subspace j is the map-side `(vec_id,
+    * slicer(j))` projection of `src`, fitted with an L2 [[kmeansFit]]
+    * codebook and then encoded in full by one broadcast 16-row [[nearest]]
+    * pass — no stage ever shuffles the vectors themselves. The
+    * [[PqSub]] sub-fits go through [[inParallel]]. Returns both halves
+    * checkpointed, so a memo hit reads blocks, not plans: codebooks
+    * `(cid, cv, cn2, sub)` and codes `(vec_id, sub, code, d2)`. The oracle
+    * twin is SparkEntry's pqSubFitCtes. */
+  private def pqSubFit(src: DataFrame)(slicer: Int => Column)
+      : (DataFrame, DataFrame) = {
+    val perSub = inParallel((0 until PqSub).map { j => () =>
+      val sub = src.select(col("vec_id"), slicer(j).as("v"))
+      val cb = kmeansFit(sub, PqK, KmeansIters, L2)
+      (cb.withColumn("sub", lit(j)),
+        nearest(sub, cb, L2, L2.score).select(col("vec_id"),
+          lit(j).as("sub"), col("cid").as("code"), col("d2")))
+    })
+    (perSub.map(_._1).reduce(_ unionByName _).localCheckpoint(),
+      perSub.map(_._2).reduce(_ unionByName _).localCheckpoint())
+  }
+
+  /** The plain PQ fit: [[pqSubFit]] over contiguous slices of the
+    * catalog. Three registered faces (codebooks, codes, ADC search) share
+    * it. */
   private def pqFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     SessionMemo.cached(spark,
       "pqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
-      import spark.implicits._
-      val emb = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      val perSub = inParallel((0 until PqSub).map { j => () =>
-        val sub = emb.select($"vec_id",
-          slice($"v", j * PqSubDim + 1, PqSubDim).as("v"))
-        val cb = kmeansL2(sub, PqK, KmeansIters)
-          .withColumn("sub", lit(j))
-        val codes = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-          .crossJoin(broadcast(cb.select($"cid", $"cv", $"cn2")))
-          .withColumn("d2",
-            ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-          .groupBy($"vec_id")
-          .agg(min_by(struct($"cid", $"d2"), struct($"d2", $"cid")).as("best"))
-          .select($"vec_id", lit(j).as("sub"),
-            $"best.cid".as("code"), $"best.d2".as("d2"))
-        (cb, codes)
-      })
-      // three registered faces (codebooks, codes, ADC search) share this
-      // fit; checkpoint both halves so a memo hit reads blocks, not plans
-      (perSub.map(_._1).reduce(_ unionByName _).localCheckpoint(),
-        perSub.map(_._2).reduce(_ unionByName _).localCheckpoint())
+      pqSubFit(Tables.vectors(spark, dir))(pqSlice(col("v"), _))
     }
 
   /** q_pq_codebooks — the fitted PQ codebooks as a (sub, cid, dim,
@@ -1557,56 +1538,33 @@ object SimilarityQueries {
       .orderBy($"vec_id", $"sub")
   }
 
+  /** Each vector's coarse cell (the L2 [[nearest]] centroid of `coarse`)
+    * and its residual r = v − c(v): `(vec_id, ccid, r)`. Both are
+    * broadcast joins against the 16-row coarse frame. */
+  private def residuals(vecs: DataFrame, coarse: DataFrame): DataFrame =
+    nearest(vecs, coarse, L2, "v").withColumnRenamed("cid", "ccid")
+      .join(broadcast(coarse.select(col("cid").as("ccid"), col("cv"))),
+        Seq("ccid"))
+      .select(col("vec_id"), col("ccid"),
+        zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"))
+
   /** IVFADC fit (Jégou et al. 2011 §IV — the residual composition FAISS
     * ships as IVF16,PQ4): a COARSE 16-cell L2 k-means over the full
     * 64-dim space partitions the catalog into inverted lists; each
     * vector's RESIDUAL v − c(v) (what the coarse cell cannot explain) is
-    * then product-quantized by four per-subspace codebooks fitted on the
-    * residual distribution. Returns (cell assignment, residual
-    * codebooks, residual codes). Everything downstream of the fits is
-    * map-side: assignment and residuals are broadcast joins against the
-    * 16-row coarse frame, and the only shuffles are the per-vector
-    * min_by partials. */
+    * then product-quantized by [[pqSubFit]] on the residual distribution.
+    * Returns (coarse centroids, cell assignment, residual codebooks,
+    * residual codes); two registered faces (codes, ADC search) share it.
+    * The only shuffles are the per-vector min_by partials. */
   private def ivfPqFit(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
     SessionMemo.cached(spark,
       "ivfpqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val coarse = kmeansL2(emb, PqK, KmeansIters)
-    val assigned = emb.withColumn("vn2", Similarity.dot($"v", $"v"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("d2",
-        ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"cid", $"v"), struct($"d2", $"cid")).as("best"))
-      .select($"vec_id", $"best.cid".as("ccid"), $"best.v".as("v"))
-    val resid = assigned
-      .join(broadcast(coarse.select($"cid".as("ccid"), $"cv")), Seq("ccid"))
-      .select($"vec_id", $"ccid",
-        zip_with($"v", $"cv", (a, b) => a - b).as("r"))
-      .localCheckpoint()
-    // the 4 residual sub-fits are independent — submit them from the
-    // driver pool so their checkpoint jobs interleave (guide §2.6)
-    val perSub = inParallel((0 until PqSub).map { j => () =>
-      val sub = resid.select($"vec_id",
-        slice($"r", j * PqSubDim + 1, PqSubDim).as("v"))
-      val cb = kmeansL2(sub, PqK, KmeansIters).withColumn("sub", lit(j))
-      val codes = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-        .crossJoin(broadcast(cb.select($"cid", $"cv", $"cn2")))
-        .withColumn("d2",
-          ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-        .groupBy($"vec_id")
-        .agg(min_by(struct($"cid", $"d2"), struct($"d2", $"cid")).as("best"))
-        .select($"vec_id", lit(j).as("sub"), $"best.cid".as("code"))
-      (cb, codes)
-    })
-    // two registered faces (codes, ADC search) share this fit; the coarse
-    // frame and resid are already checkpointed, so materialize the unions
-    (coarse, resid.select($"vec_id", $"ccid"),
-      perSub.map(_._1).reduce(_ unionByName _).localCheckpoint(),
-      perSub.map(_._2).reduce(_ unionByName _).localCheckpoint())
+    val emb = Tables.vectors(spark, dir)
+    val coarse = kmeansFit(emb, PqK, KmeansIters, L2)
+    val resid = residuals(emb, coarse).localCheckpoint()
+    val (rcb, codes) = pqSubFit(resid)(pqSlice(col("r"), _))
+    (coarse, resid.select(col("vec_id"), col("ccid")), rcb, codes)
   }
 
   /** q_ivfpq_codes — the IVFADC compressed representation of each probe
@@ -1622,87 +1580,61 @@ object SimilarityQueries {
       .orderBy($"vec_id", $"sub")
   }
 
-  /** q_ann_ivfpq — IVFADC search (nprobe=1): each query (vec_id < 10)
-    * routes to its nearest coarse cell, builds the 4×16 exact lookup
-    * table of residual-query→centroid d² (6-dp DECIMAL grid), and ADC
-    * ranks ONLY that cell's inverted list — the codes of one cell are
-    * scanned, nothing else, which is precisely why IVFADC sustains
-    * billion-vector catalogs. Top-3 per query, tie → lowest id. */
-  def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val (coarse, cells, rcb, codes) = ivfPqFit(spark, dir)
-    // query-side routing + residual (the same broadcast shape as the fit)
-    val qres = emb.filter($"vec_id" < 10)
-      .withColumn("vn2", Similarity.dot($"v", $"v"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("d2",
-        ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-      .groupBy($"vec_id")
-      .agg(min_by(struct($"cid", $"v"), struct($"d2", $"cid")).as("best"))
-      .select($"vec_id".as("query_id"), $"best.cid".as("qccid"), $"best.v".as("v"))
-      .join(broadcast(coarse.select($"cid".as("qccid"), $"cv")), Seq("qccid"))
-      .select($"query_id", $"qccid",
-        zip_with($"v", $"cv", (a, b) => a - b).as("qr"))
-    val qsub = qres
-      .select($"query_id", $"qccid",
-        explode(array((0 until PqSub).map(j => struct(lit(j).as("sub"),
-          slice($"qr", j * PqSubDim + 1, PqSubDim).as("qv"))): _*)).as("s"))
-      .select($"query_id", $"qccid", $"s.sub".as("sub"), $"s.qv".as("qv"))
-      .withColumn("qn2", Similarity.dot($"qv", $"qv"))
-    val lut = qsub.join(broadcast(rcb), Seq("sub"))
-      .select($"query_id", $"qccid", $"sub", $"cid",
-        round(($"qn2" - lit(2.0) * Similarity.dot($"qv", $"cv")) + $"cn2", 6)
-          .cast("decimal(18,6)").as("qd2"))
-    val cand = codes.join(cells, Seq("vec_id"))
-    val adc = cand.join(broadcast(lut),
-        cand("ccid") === lut("qccid") && cand("sub") === lut("sub") &&
-          cand("code") === lut("cid") && cand("vec_id") =!= lut("query_id"))
-      .groupBy($"query_id", cand("vec_id").as("neighbor_id"))
-      .agg(sum($"qd2").as("adc"))
-    val w = Window.partitionBy($"query_id").orderBy($"adc", $"neighbor_id")
+  /** ADC search — the PQ paper's eq. 13 in partial+final aggregate form.
+    * For each query `(query_id, v, keys…)`, build the exact
+    * query-subvector→centroid d² table against `codebooks` (PqSub × PqK
+    * rows, 6-dp-quantized into DECIMAL so the 4-term per-candidate fold
+    * is order-exact), broadcast it, scan the code catalog `(vec_id, sub,
+    * code, keys…)` once joining on (keys, sub, code), and sum per
+    * (query, candidate): the codes never shuffle more than their partial
+    * sums. Top-3 per query, tie → lowest neighbor_id. */
+  private def adcTop3(queries: DataFrame, codebooks: DataFrame,
+      codes: DataFrame, keys: String*): DataFrame = {
+    val qkeys = col("query_id") +: keys.map(col)
+    val subvecs = array((0 until PqSub).map(j =>
+      struct(lit(j).as("sub"), pqSlice(col("v"), j).as("qv"))): _*)
+    val lut = queries
+      .select(qkeys :+ explode(subvecs).as("s"): _*)
+      .select(qkeys :+ col("s.sub").as("sub") :+ col("s.qv").as("qv"): _*)
+      .withColumn("qn2", L2.norm(col("qv")))
+      .join(broadcast(codebooks), Seq("sub"))
+      .select(qkeys ++ Seq(col("sub"), col("cid"),
+        round(L2.scoreOf(col("qv"), col("qn2"), col("cv"), col("cn2")), 6)
+          .cast("decimal(18,6)").as("qd2")): _*)
+    val on = keys.map(k => codes(k) === lut(k)) ++ Seq(
+      codes("sub") === lut("sub"), codes("code") === lut("cid"),
+      codes("vec_id") =!= lut("query_id"))
+    val adc = codes.join(broadcast(lut), on.reduce(_ && _))
+      .groupBy(col("query_id"), codes("vec_id").as("neighbor_id"))
+      .agg(sum(col("qd2")).as("adc"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc"), col("neighbor_id"))
     adc.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
-      .select($"query_id", $"neighbor_id",
-        round($"adc".cast("double"), 6).as("adc_dist"), $"rank")
-      .orderBy($"query_id", $"rank")
+      .filter(col("rank") <= 3)
+      .select(col("query_id"), col("neighbor_id"),
+        round(col("adc").cast("double"), 6).as("adc_dist"), col("rank"))
+      .orderBy(col("query_id"), col("rank"))
   }
 
-  /** q_ann_pq — ADC approximate nearest neighbors: for each query
-    * (vec_id < 10) precompute the exact query-subvector→centroid d² table
-    * (PqSub × PqK rows, 6-dp-quantized into DECIMAL so the 4-term
-    * per-candidate fold is order-exact), broadcast it, scan the code
-    * catalog once joining on (sub, code), and sum per (query, candidate).
-    * Top-3 per query, tie → lowest neighbor_id. This is the PQ paper's
-    * ADC (eq. 13) in partial+final aggregate form — the codes never
-    * shuffle more than their (query, candidate) partial sums. */
+  /** q_ann_ivfpq — IVFADC search (nprobe=1): each query (vec_id < 10)
+    * routes to its nearest coarse cell and [[adcTop3]]-ranks the residual
+    * query against ONLY that cell's inverted list — the codes of one cell
+    * are scanned, nothing else, which is precisely why IVFADC sustains
+    * billion-vector catalogs. */
+  def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
+    val (coarse, cells, rcb, codes) = ivfPqFit(spark, dir)
+    val queries = residuals(
+        Tables.vectors(spark, dir).filter(col("vec_id") < 10), coarse)
+      .select(col("vec_id").as("query_id"), col("ccid"), col("r").as("v"))
+    adcTop3(queries, rcb, codes.join(cells, Seq("vec_id")), "ccid")
+  }
+
+  /** q_ann_pq — ADC approximate nearest neighbors: [[adcTop3]] of each
+    * query (vec_id < 10) against the whole PQ code catalog. */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val (cb, codes) = pqFit(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val qsub = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("query_id"),
-        explode(array((0 until PqSub).map(j => struct(lit(j).as("sub"),
-          slice($"v", j * PqSubDim + 1, PqSubDim).as("qv"))): _*)).as("s"))
-      .select($"query_id", $"s.sub".as("sub"), $"s.qv".as("qv"))
-      .withColumn("qn2", Similarity.dot($"qv", $"qv"))
-    val lut = qsub.join(broadcast(cb), Seq("sub"))
-      .select($"query_id", $"sub", $"cid",
-        round(($"qn2" - lit(2.0) * Similarity.dot($"qv", $"cv")) + $"cn2", 6)
-          .cast("decimal(18,6)").as("qd2"))
-    val adc = codes.join(broadcast(lut),
-        codes("sub") === lut("sub") && codes("code") === lut("cid") &&
-          codes("vec_id") =!= lut("query_id"))
-      .groupBy($"query_id", codes("vec_id").as("neighbor_id"))
-      .agg(sum($"qd2").as("adc"))
-    val w = Window.partitionBy($"query_id").orderBy($"adc", $"neighbor_id")
-    adc.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
-      .select($"query_id", $"neighbor_id",
-        round($"adc".cast("double"), 6).as("adc_dist"), $"rank")
-      .orderBy($"query_id", $"rank")
+    adcTop3(Tables.vectors(spark, dir).filter(col("vec_id") < 10)
+      .withColumnRenamed("vec_id", "query_id"), cb, codes)
   }
 
   // ---------------------------------------------------------------------
@@ -1739,7 +1671,7 @@ object SimilarityQueries {
   /** The greedy balanced-variance allocation. Determinism doctrine: the
     * variance lands on the shared 6-dp DECIMAL grid (the double
     * subtraction happens pre-round; both engines' avgs agree far inside
-    * the quantum — the [[kmeansL2]] mean-grid precedent), and every
+    * the quantum — the [[kmeansFit]] mean-grid precedent), and every
     * subsequent comparison — the (variance DESC, dim) sort, the running
     * subspace sums, the argmin with tie → lowest subspace — is exact
     * decimal/int arithmetic, so the DuckDB recursive-CTE replay picks the
@@ -1783,34 +1715,19 @@ object SimilarityQueries {
       .sortBy(_.dim)
   }
 
-  /** The permuted refit: four [[kmeansL2]] codebooks over the allocation's
-    * subspaces plus the full-catalog code assignment with quantization d²
-    * — exactly [[pqFit]]'s plan on permuted slices. Returns (codebooks
-    * (sub, cid, cv, cn2), codes (vec_id, sub, code, d2)). */
+  /** The permuted refit: [[pqSubFit]] over the allocation's subspaces,
+    * each slice a literal projection of its allocated dimensions in
+    * ascending order — exactly [[pqFit]]'s plan on permuted slices.
+    * Returns (codebooks (cid, cv, cn2, sub), codes (vec_id, sub, code,
+    * d2)). */
   private def opqFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     SessionMemo.cached(spark,
       "opqfit:" + SessionMemo.tableTag(dir, "embeddings")) {
-      import spark.implicits._
       val alloc = opqAllocate(spark, dir)
-      val emb = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      val perSub = (0 until PqSub).map { j =>
-        val dims = alloc.filter(_.sub == j).sortBy(_.pos).map(_.dim)
-        val sub = emb.select($"vec_id",
-          array(dims.map(p => element_at($"v", p)): _*).as("v"))
-        val cb = kmeansL2(sub, PqK, KmeansIters).withColumn("sub", lit(j))
-        val codes = sub.withColumn("vn2", Similarity.dot($"v", $"v"))
-          .crossJoin(broadcast(cb.select($"cid", $"cv", $"cn2")))
-          .withColumn("d2",
-            ($"vn2" - lit(2.0) * Similarity.dot($"v", $"cv")) + $"cn2")
-          .groupBy($"vec_id")
-          .agg(min_by(struct($"cid", $"d2"), struct($"d2", $"cid")).as("best"))
-          .select($"vec_id", lit(j).as("sub"),
-            $"best.cid".as("code"), $"best.d2".as("d2"))
-        (cb, codes)
+      pqSubFit(Tables.vectors(spark, dir)) { j =>
+        array(alloc.filter(_.sub == j).sortBy(_.pos)
+          .map(a => element_at(col("v"), a.dim)): _*)
       }
-      (perSub.map(_._1).reduce(_ unionByName _).localCheckpoint(),
-        perSub.map(_._2).reduce(_ unionByName _).localCheckpoint())
     }
 
   /** q_opq_assign — the dimension→subspace permutation itself (64 rows:

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Loaders for the driver's parquet test tables (TESTDATA.md) plus the
@@ -57,4 +58,10 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
+
+  /** The embedding catalog as `(vec_id, v)` with `v` an `array<double>` —
+    * the one place the vector operators' element type is decided. */
+  def vectors(spark: SparkSession, dir: String): DataFrame =
+    embeddings(spark, dir).select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v"))
 }

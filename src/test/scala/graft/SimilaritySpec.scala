@@ -163,14 +163,15 @@ class SimilaritySpec extends SparkSpec {
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .agg(avg(lit(1.0) - col("ccos"))).head().getDouble(0)
     }
-    val seeds = SimilarityQueries.kmeansCentroids(emb, 16, 0)
-    val fitted = SimilarityQueries.kmeansCentroids(emb, 16, SimilarityQueries.KmeansIters)
+    import SimilarityQueries.{Cosine, kmeansFit}
+    val seeds = kmeansFit(emb, 16, 0, Cosine)
+    val fitted = kmeansFit(emb, 16, SimilarityQueries.KmeansIters, Cosine)
     assert(seeds.count() == 16 && fitted.count() == 16)
     assert(cost(fitted) <= cost(seeds) + 1e-6,
       s"Lloyd rounds made the quantizer worse: ${cost(fitted)} vs ${cost(seeds)}")
     // bit-identical across invocations (6-dp mean rounding kills fold noise)
     val a = fitted.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val b = SimilarityQueries.kmeansCentroids(emb, 16, SimilarityQueries.KmeansIters)
+    val b = kmeansFit(emb, 16, SimilarityQueries.KmeansIters, Cosine)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(a == b)
   }
@@ -185,6 +186,56 @@ class SimilaritySpec extends SparkSpec {
     assert(nWindows(SimilarityQueries.embedDupPairs(spark, sf)) == 0)
     assert(nWindows(SimilarityQueries.semanticDedup(spark, sf)) == 0)
     assert(nWindows(SimilarityQueries.annIvf(spark, sf)) == 1)
+    // the L2 faces: PQ, IVFADC and OPQ fits and encodings are aggregates;
+    // the ADC searches keep only their per-query top-k rank
+    assert(nWindows(SimilarityQueries.pqCodes(spark, sf)) == 0)
+    assert(nWindows(SimilarityQueries.ivfPqCodes(spark, sf)) == 0)
+    assert(nWindows(SimilarityQueries.opqCodebooks(spark, sf)) == 0)
+    assert(nWindows(SimilarityQueries.annPq(spark, sf)) == 1)
+    assert(nWindows(SimilarityQueries.annIvfPq(spark, sf)) == 1)
+  }
+
+  test("shared quantizer on degenerate input: ties, an emptied cell, a zero vector") {
+    import org.apache.spark.sql.DataFrame
+    import SimilarityQueries.{Cosine, KmeansIters, L2, Metric, kmeansFit, nearest}
+    // seeds are vec_ids 0-2. Seed 1 duplicates seed 0, so ties send all of
+    // cell 1's would-be members to cid 0 and the cell empties in round 1.
+    // Vec 3 is exactly equidistant from every seed under both metrics;
+    // vec 4 has zero norm.
+    val vecs = Seq(0L -> Seq(1.0, 0.0), 1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 1.0),
+      3L -> Seq(1.0, 1.0), 4L -> Seq(0.0, 0.0), 5L -> Seq(2.0, 0.0),
+      6L -> Seq(0.0, 3.0)).toDF("vec_id", "v")
+    val nonZero = vecs.filter($"vec_id" =!= 4L)
+    def cids(in: DataFrame, cents: DataFrame, m: Metric): Map[Long, Long] = {
+      val rows = nearest(in, cents, m).collect()
+      assert(rows.length == in.count(), s"$m assignment dropped a row")
+      rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    def cvs(cents: DataFrame): Map[Long, Seq[Double]] =
+      cents.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val seedCells = Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 0L, 5L -> 0L, 6L -> 2L)
+    // L2 takes the zero vector like any other: its d² is ‖c‖²
+    assert(cids(vecs, kmeansFit(vecs, 3, 0, L2), L2) == seedCells + (4L -> 0L))
+    assert(cids(nonZero, kmeansFit(nonZero, 3, 0, Cosine), Cosine) == seedCells)
+    // one Lloyd round: cell 0 averages its members (under L2 the zero
+    // vector among them), the emptied cell 1 keeps its seed
+    assert(cvs(kmeansFit(vecs, 3, 1, L2)) ==
+      Map(0L -> Seq(1.0, 0.2), 1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 2.0)))
+    assert(cvs(kmeansFit(nonZero, 3, 1, Cosine)) ==
+      Map(0L -> Seq(1.25, 0.25), 1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 2.0)))
+    // on the fitted L2 quantizer the zero vector lands on the smallest-norm
+    // centroid, cell 1
+    assert(cids(vecs, kmeansFit(vecs, 3, KmeansIters, L2), L2)(4L) == 1L)
+    // cosine has no answer for a zero vector: under ANSI arithmetic the
+    // score 0/0 is a named DIVIDE_BY_ZERO error, in the assignment and in
+    // the fit alike
+    def divByZero(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("DIVIDE_BY_ZERO")), e)
+    }
+    divByZero(nearest(vecs, kmeansFit(nonZero, 3, 0, Cosine), Cosine).collect())
+    divByZero(kmeansFit(vecs, 3, 1, Cosine))
   }
 
   test("semDedupK: 16 at every graded tier, then linear growth — the " +
